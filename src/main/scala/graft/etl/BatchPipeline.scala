@@ -51,11 +51,7 @@ object BatchPipeline {
     * path (K4 DLQ analog), write good events as JSONL (K2), return
     * per-file counts (A1/A2). */
   def run(spark: org.apache.spark.sql.SparkSession, inDir: String, outDir: String): DataFrame = {
-    val udm = UdmTransform.transform(readRawPackets(spark, inDir), "raw")
-      .withColumn("event", col("event_struct.event"))
-      .withColumn("is_error",
-        col("event.metadata.product_name").contains("PacketProcessingError") ||
-          col("event.metadata.product_name").contains("Malformed"))
+    val udm = graft.streaming.StreamingPipeline.toUdm(readRawPackets(spark, inDir))
       .cache() // consumed three times below; don't re-parse per sink
     try {
       udm.filter(col("is_error"))
@@ -64,7 +60,8 @@ object BatchPipeline {
       udm.filter(!col("is_error"))
         .select(col("udm_json"))
         .write.mode(SaveMode.Overwrite).text(s"$outDir/events")
-      UdmTransform.perFileCounts(udm).localCheckpoint(eager = true)
+      UdmTransform.perFileCounts(udm, packetError = col("packet_error"))
+        .localCheckpoint(eager = true)
     } finally udm.unpersist()
   }
 

@@ -55,13 +55,20 @@ object StreamingPipeline {
           array(col("value")))).as("raw"))
   }
 
-  /** The transform stage (shared with batch — same expressions). */
-  def toUdm(packets: DataFrame): DataFrame =
-    UdmTransform.transform(packets, "raw")
-      .withColumn("event", col("event_struct.event"))
-      .withColumn("is_error",
-        col("event.metadata.product_name").contains("PacketProcessingError") ||
-          col("event.metadata.product_name").contains("Malformed"))
+  /** The transform stage, shared with [[graft.etl.BatchPipeline.run]]:
+    * packets → only what the sinks read. `source_file`, `udm_json`,
+    * `is_error` (DLQ routing: conversion-error or malformed event) and
+    * `packet_error` (the A1/A2 error flag for
+    * [[UdmTransform.perFileCounts]]). Batch bodies cache this frame, so
+    * the typed event structs are never materialized beside the JSON. */
+  def toUdm(packets: DataFrame): DataFrame = {
+    val event = col("event_struct.event")
+    val packetError = UdmTransform.isPacketError(event)
+    val malformed = event.getField("metadata").getField("product_name").contains("Malformed")
+    UdmTransform.transform(packets, "raw").select(
+      col("source_file"), col("udm_json"),
+      (packetError || malformed).as("is_error"), packetError.as("packet_error"))
+  }
 
   /** Wire the full pipeline: landing dir → UDM JSONL + error DLQ +
     * per-file notification/metrics table. Delivery contract:
@@ -130,7 +137,7 @@ object StreamingPipeline {
             // for a non-empty batch is structurally impossible; and any
             // sink-write failure throws out of foreachBatch, failing the
             // batch so the checkpoint retries it (up to maxAttempts).
-            UdmTransform.perFileCounts(b)
+            UdmTransform.perFileCounts(b, packetError = col("packet_error"))
               .write.mode("overwrite").json(s"$outDir/_notifications/batch_id=$batchId")
           } finally b.unpersist()
         }
@@ -291,23 +298,38 @@ object StreamingPipeline {
     * batch dirs that the replayed batch overwrites wholesale (the
     * at-least-once contract is per-sink idempotence, never
     * inter-sink ordering — the one order-bearing write, the notify
-    * pipeline's `_latency` stamp, stays strictly AFTER this call). */
-  private def runSinksConcurrently(sinks: Seq[() => Unit]): Unit =
+    * pipeline's `_latency` stamp, stays strictly AFTER this call).
+    *
+    * An interrupted caller (query stop) interrupts every sink thread,
+    * waits until none is still running, restores its interrupt flag and
+    * rethrows: no sink outlives the call, whichever way it ends. */
+  private[graft] def runSinksConcurrently(sinks: Seq[() => Unit]): Unit =
     if (sinks.sizeIs <= 1) sinks.foreach(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size)
+      import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+      val pool = Executors.newFixedThreadPool(sinks.size)
       try {
         val futures = sinks.map { s =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = s()
-          })
+          pool.submit(new Callable[Unit] { def call(): Unit = s() })
         }
-        val failures = futures.flatMap { f =>
-          try { f.get(); None }
-          catch {
-            case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+        val failures =
+          try futures.flatMap { f =>
+            try { f.get(); None }
+            catch { case e: ExecutionException => Some(e.getCause) }
+          } catch {
+            case e: InterruptedException =>
+              futures.foreach(_.cancel(true))
+              pool.shutdown()
+              // further interrupts while waiting are folded into the
+              // flag restored below
+              var finished = false
+              while (!finished) {
+                try finished = pool.awaitTermination(1, TimeUnit.MINUTES)
+                catch { case _: InterruptedException => () }
+              }
+              Thread.currentThread().interrupt()
+              throw e
           }
-        }
         failures.foreach(e => throw e)
       } finally pool.shutdown()
     }
@@ -442,7 +464,7 @@ object StreamingPipeline {
                     col("udm_json").as("payload"), col("dlq_reason"))
                   .unionByName(dlqInvalid)
                   .write.mode("overwrite").json(s"$outDir/_errors/batch_id=$batchId"),
-                () => UdmTransform.perFileCounts(b)
+                () => UdmTransform.perFileCounts(b, packetError = col("packet_error"))
                   .write.mode("overwrite").json(s"$outDir/_notifications/batch_id=$batchId")))
               // A3: per-file ingest→commit latency, the reference's
               // PROCESSING_DURATION_SECONDS metric per processed file

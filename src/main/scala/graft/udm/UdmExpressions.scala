@@ -75,6 +75,14 @@ object UdmExpressions {
     *     deterministic for the oracle).
     * All times are interpreted as UTC (session timezone must be UTC),
     * matching `frame.time_utc` semantics.
+    *
+    * Per-run values (now, batch time, run ids) must never reach
+    * generated code as Long, Int or timestamp literals: Spark writes
+    * those into the generated Java source, so every run compiles a new
+    * class. `current_timestamp()` folds to such a literal at plan time.
+    * [[udmEventPre]] therefore passes a null `fallback` here and applies
+    * the processing time afterwards as a formatted string, which
+    * generated code reads through its reference array.
     */
   def robustTimestamp(ts: Column, fallback: Column = current_timestamp()): Column = {
     val s26 = substring(ts, 1, 26)
@@ -306,6 +314,7 @@ object UdmExpressions {
       desc.as("description"))
 
   private val nullStr = lit(null.asInstanceOf[String])
+  private val nullTs = lit(null).cast(TimestampType)
 
   /** P12/P14 — total row→row transform: raw packet JSON text → UDM event
     * struct. EVERY input row yields exactly one event (the reference's
@@ -352,7 +361,12 @@ object UdmExpressions {
   /** Innermost assembly over pre-computed hot sub-expressions. `qNames`
     * and `ttls` are each referenced twice downstream (dns section +
     * about / error detection) — callers that project them into their
-    * own columns halve the interpreted higher-order-function work. */
+    * own columns halve the interpreted higher-order-function work.
+    *
+    * `fallbackTs` enters the plan only as `fallbackIso`, its formatted
+    * string, so the generated projection is the same from one run to
+    * the next. Per-run values must never reach generated code as Long,
+    * Int or timestamp literals — see [[robustTimestamp]]. */
   def udmEventPre(l: Column, rec: Column, qNames: Column, ttls: Column,
                   raw: Column, fallbackTs: Column): Column = {
     val fallbackIso = isoMicros(fallbackTs)
@@ -384,7 +398,8 @@ object UdmExpressions {
         errMsg.as("processing_error_message"),
         snippet.as("original_packet_data_snippet")).as("additional"))
 
-    val ts = isoMicros(robustTimestamp(f(f(l, "frame"), "frame.time_utc"), fallbackTs))
+    val ts = coalesce(
+      isoMicros(robustTimestamp(f(f(l, "frame"), "frame.time_utc"), nullTs)), fallbackIso)
     val app = structOrNull("http" -> httpInfo(l), "dns" -> dnsInfo(l, qNames, ttls),
       "tls" -> tlsInfo(l, rec))
     val net = network(l, app)

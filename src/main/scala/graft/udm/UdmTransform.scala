@@ -40,16 +40,23 @@ object UdmTransform {
   def toJson(event: Column): Column =
     graft.functions.StructToJsonExpr(event)
 
+  /** True for an event from the P14 conversion-error branch — what the
+    * reference counts as a packet error (json2udm_cloud.py:344–348). */
+  def isPacketError(event: Column): Column =
+    event.getField("metadata").getField("product_name").contains("PacketProcessingError")
+
   /** A1/A2 — per-file packet + error counts (json2udm_cloud.py:325–348,
     * the `UDM_PACKETS_PROCESSED` / `UDM_PACKET_ERRORS` log lines).
+    * `packetError` defaults to [[isPacketError]] of an `event` column;
+    * frames that carry only the flag pass it instead.
     * Map-side partial aggregation makes this cheap at any scale: the
     * shuffle key cardinality is the number of files. */
-  def perFileCounts(udm: DataFrame, fileCol: String = "source_file"): DataFrame =
+  def perFileCounts(udm: DataFrame, fileCol: String = "source_file",
+                    packetError: Column = isPacketError(col("event"))): DataFrame =
     udm.groupBy(col(fileCol).as("file"))
       .agg(
         count(lit(1)).as("packets_processed"),
-        sum(when(col("event.metadata.product_name")
-          .contains("PacketProcessingError"), 1L).otherwise(0L)).as("packet_errors"))
+        sum(when(packetError, 1L).otherwise(0L)).as("packet_errors"))
 
   /** Full batch pipeline: raw packet JSON strings column → UDM events
     * DataFrame with serialized JSON alongside the typed struct.

@@ -877,6 +877,79 @@ class PipelineSpec extends SparkSpec {
     assert(events == 3 && errors == 2) // 3 good, 1 int-error + 1 malformed
   }
 
+  test("batch pipeline reuses its generated code across runs; the P3 fallback stays per run") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import java.time.Instant
+    import java.time.temporal.ChronoUnit.MICROS
+    val in = Files.createTempDirectory("graft_cg_in").toString
+    val untimed = goodPacket.replace("\"frame.number\": \"1\"", "\"frame.number\": \"3\"")
+      .replace("Sep  5, 2025 12:34:56.123456000 UTC", "not a time")
+    mkCapture(in, "capture_001.pcap.json", goodPacket, untimed, errorPacket)
+    Files.writeString(Paths.get(in, "capture_002.pcap.json"), "corrupt bytes")
+
+    // (codegen compiles during the run, the untimed packet's event time,
+    // the run's start and end)
+    def runOnce(): (Long, Instant, Instant, Instant) = {
+      val out = Files.createTempDirectory("graft_cg_out").toString
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val start = Instant.now().truncatedTo(MICROS)
+      BatchPipeline.run(spark, in, out).collect()
+      val end = Instant.now()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+      val ts = spark.read.json(s"$out/events")
+        .filter(col("event.metadata.description").endsWith("Frame No: 3"))
+        .select("event.metadata.event_timestamp").collect().map(_.getString(0))
+      assert(ts.length == 1)
+      (compiled, Instant.parse(ts.head), start, end)
+    }
+
+    val (_, ts1, start1, end1) = runOnce()
+    Thread.sleep(1100)
+    val (compiled2, ts2, start2, end2) = runOnce()
+    assert(compiled2 == 0,
+      "a per-run value reached generated code as a literal: the second run recompiled")
+    // P3: an unparseable frame.time_utc takes its own run's processing time
+    assert(!ts1.isBefore(start1) && !ts1.isAfter(end1))
+    assert(!ts2.isBefore(start2) && !ts2.isAfter(end2))
+  }
+
+  test("runSinksConcurrently: an interrupted caller stops every sink before it returns") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val running = new AtomicInteger(0)
+    val started = new CountDownLatch(1)
+    val never = new CountDownLatch(1)
+    def sink(body: => Unit): () => Unit = () => {
+      running.incrementAndGet()
+      try body finally running.decrementAndGet()
+    }
+    val quick = sink(())
+    val stuck = sink {
+      started.countDown()
+      // an interrupted write takes a while to unwind
+      try never.await() finally Thread.sleep(200)
+    }
+    var thrown: Option[Throwable] = None
+    var runningAtReturn = -1
+    var interruptedAtReturn = false
+    val caller = new Thread(() => {
+      try StreamingPipeline.runSinksConcurrently(Seq(quick, stuck))
+      catch { case e: Throwable => thrown = Some(e) }
+      runningAtReturn = running.get()
+      interruptedAtReturn = Thread.currentThread().isInterrupted
+    })
+    try {
+      caller.start()
+      assert(started.await(30, TimeUnit.SECONDS))
+      caller.interrupt()
+      caller.join(30000)
+      assert(!caller.isAlive)
+      assert(thrown.exists(_.isInstanceOf[InterruptedException]))
+      assert(interruptedAtReturn, "the caller's interrupt flag must be restored")
+      assert(runningAtReturn == 0, "a sink was still running after the call returned")
+    } finally never.countDown()
+  }
+
   test("filename ops: validation (F1) and derivation (P16)") {
     import spark.implicits._
     val df = Seq("capture_1.pcap", "capture_2.pcapng", "", "evil/name.pcap",
